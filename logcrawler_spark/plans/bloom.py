@@ -146,31 +146,13 @@ def filter_not_seen(
     hash_col: str = "url_hash",
     key_cols: list[str] | None = None,
     n_buckets: int = 32,
-    bucket_transform=None,
-    return_flagged: bool = False,
-    confirm: str = "join",
-):
+) -> DataFrame:
     """candidates minus url_seen, with optional Bloom pre-split.
 
-    Definitely-new rows (Bloom negative) bypass the anti-join shuffle;
-    maybe-seen rows are confirmed exactly. Without ``blooms``, a plain
-    left-anti join (both sides co-bucketed by the catalog layout).
-
-    Probe shape: candidates are cogrouped with the bloom table on the hash
-    bucket — one candidate shuffle, one bloom row per task, no driver
-    collect and no multi-GB broadcast (VERDICT r01 weak #1). The flagged
-    frame is materialized ONCE so the fresh/confirm split does not
-    re-evaluate the probe kernel (ADVICE r01).
-
-    ``bucket_transform``: optional pandas fn applied to each candidate
-    bucket group BEFORE probing. Because the bucket is pmod(url_hash) and
-    url_hash is a function of the canonical key, all rows sharing a key are
-    colocated — so per-key work (e.g. the crawl's within-batch LWW dedup)
-    rides the probe's shuffle instead of paying its own window shuffle.
-
-    ``return_flagged``: also return the materialized flagged frame (rows ==
-    post-transform candidates), so callers can count candidates from its
-    parquet footers instead of running another job.
+    Without ``blooms``: the exact path, one left-anti join on the keys
+    (both sides co-bucketed by the catalog layout). With ``blooms``:
+    definitely-new rows (Bloom negative) bypass the anti-join; maybe-seen
+    rows are confirmed exactly — see :func:`cogroup_filter_not_seen`.
 
     ``n_buckets`` must be a power of two: the JVM side buckets with signed
     ``pmod`` and the numpy probe with uint64 wrap-around modulo — they agree
@@ -179,7 +161,6 @@ def filter_not_seen(
     assert n_buckets & (n_buckets - 1) == 0, "n_buckets must be a power of 2"
     keys = key_cols or [hash_col]
     if blooms is None:
-        assert bucket_transform is None and not return_flagged
         return candidates.join(url_seen, on=keys, how="left_anti")
 
     def _bloom_probe(bloom_pdf: pd.DataFrame, hs: np.ndarray) -> np.ndarray:
@@ -193,8 +174,7 @@ def filter_not_seen(
         return bits[pos].all(axis=1)
 
     return cogroup_filter_not_seen(
-        candidates, url_seen, blooms, _bloom_probe, hash_col, keys,
-        n_buckets, bucket_transform, return_flagged, confirm,
+        candidates, url_seen, blooms, _bloom_probe, hash_col, keys, n_buckets
     )
 
 
@@ -206,107 +186,33 @@ def cogroup_filter_not_seen(
     hash_col: str,
     keys: list[str],
     n_buckets: int,
-    bucket_transform=None,
-    return_flagged: bool = False,
-    confirm: str = "join",
-):
+) -> DataFrame:
     """Shared cogrouped-probe skeleton for any per-bucket membership filter
     (Bloom, cuckoo, ...): candidates shuffle once on their hash bucket and
     meet the bucket's filter row(s); ``probe_rows_fn(table_pdf, hashes)``
     returns the maybe-seen mask; a missing bucket row means no seen keys.
 
-    ``confirm`` selects how filter positives get their exact check:
-
-    - ``"join"`` (default): the probed frame splits into fresh (filter
-      negative — definitely new) and maybe rows; maybe rows are confirmed
-      by a left-anti join against ``url_seen``. The two-consumer fan-out
-      is pinned by an eager scratch-parquet round trip (its own job;
-      callers read the flagged count off parquet footers for free).
-    - ``"inline"``: the bucket's ``url_seen`` KEYS ride the candidate side
-      of the same cogroup (same url_hash -> same bucket, so they are
-      colocated by the one shuffle that already happens), and the kernel
-      resolves filter positives against them in-place. Returns ONE frame
-      (candidate columns + ``__seen`` boolean) with a single consumer —
-      no fan-out to pin, no separate anti-join stage barriers, no extra
-      job. The caller filters ``~__seen`` (and can hang an Observation
-      between kernel and filter for an exact post-dedup candidate count).
-      Scale trade (explicit): the seen keys transit the shuffle + Arrow
-      every call — the same O(|url_seen|)-per-round the anti-join's
-      shuffle paid, now with zero extra stages; bucket key sets live in
-      one pandas frame, so ``n_buckets`` must scale with the corpus
-      (10^10 keys / 2^14 buckets ~= 45 MB of keys per task).
+    The probed frame splits into fresh (filter negative — definitely new)
+    and maybe rows; maybe rows are confirmed by a left-anti join against
+    ``url_seen``, so url_seen is scanned only for the filter's positives.
+    The two-consumer fan-out is pinned by an eager scratch-parquet round
+    trip (its own job), so the split does not re-evaluate the probe kernel
+    (ADVICE r01).
     """
     from pyspark.sql.types import BooleanType, StructField, StructType
 
     from logcrawler_spark.utils import materialize
 
     out_cols = list(candidates.columns)
-    if confirm == "inline":
-        flag_name = "__seen"
-    else:
-        flag_name = "__maybe"
     # a FRESH StructType — StructType.add mutates in place and
     # DataFrame.schema is cached, so the caller's frame would grow a
     # phantom flag column (ADVICE r02)
     flagged_schema = StructType(
         list(candidates.schema.fields)
-        + [StructField(flag_name, BooleanType())]
+        + [StructField("__maybe", BooleanType())]
     )
 
-    if confirm == "inline":
-        # union the seen KEYS into the candidate side: key rows carry nulls
-        # for every non-key candidate column and __kind='s'
-        sel = [
-            (
-                F.col(f.name)
-                if f.name in keys
-                else F.lit(None).cast(f.dataType).alias(f.name)
-            )
-            for f in candidates.schema.fields
-        ]
-        cand_u = candidates.withColumn("__kind", F.lit("c")).unionByName(
-            url_seen.select(*sel).withColumn("__kind", F.lit("s"))
-        )
-
-        def _probe_inline(
-            cand_pdf: pd.DataFrame, tbl_pdf: pd.DataFrame
-        ) -> pd.DataFrame:
-            is_key = cand_pdf["__kind"].to_numpy() == "s"
-            cands = cand_pdf[~is_key]
-            if bucket_transform is not None:
-                cands = bucket_transform(cands)
-            out = cands[out_cols].copy()
-            if tbl_pdf.empty or out.empty:
-                # no filter row -> bucket has no seen keys (invariant:
-                # filter covers url_seen, so no key rows either way)
-                out[flag_name] = False
-                return out
-            hs = cands[hash_col].to_numpy().astype(np.uint64)
-            maybe = probe_rows_fn(tbl_pdf, hs)
-            seen_keys = cand_pdf[is_key]
-            if seen_keys.empty:
-                out[flag_name] = False
-                return out
-            # exact confirm of filter positives against the bucket's key
-            # set — vectorized two-column membership via an index merge
-            probe_idx = pd.MultiIndex.from_frame(cands[keys])
-            seen_idx = pd.MultiIndex.from_frame(seen_keys[keys])
-            out[flag_name] = maybe & probe_idx.isin(seen_idx)
-            return out
-
-        return (
-            cand_u.withColumn(
-                "__bucket",
-                F.pmod(F.col(hash_col), F.lit(n_buckets)).cast("int"),
-            )
-            .groupBy("__bucket")
-            .cogroup(tables.groupBy("bucket"))
-            .applyInPandas(_probe_inline, schema=flagged_schema)
-        )
-
     def _probe(cand_pdf: pd.DataFrame, tbl_pdf: pd.DataFrame) -> pd.DataFrame:
-        if bucket_transform is not None:
-            cand_pdf = bucket_transform(cand_pdf)
         out = cand_pdf[out_cols].copy()
         if tbl_pdf.empty:
             out["__maybe"] = False  # no filter row -> bucket has no seen keys
@@ -329,5 +235,4 @@ def cogroup_filter_not_seen(
         .drop("__maybe")
         .join(url_seen, on=keys, how="left_anti")
     )
-    unseen = fresh.unionByName(confirm_df)
-    return (unseen, flagged) if return_flagged else unseen
+    return fresh.unionByName(confirm_df)

@@ -385,10 +385,7 @@ def filter_not_seen_cuckoo(
     hash_col: str = "url_hash",
     key_cols: list[str] | None = None,
     n_buckets: int = 32,
-    bucket_transform=None,
-    return_flagged: bool = False,
-    confirm: str = "join",
-):
+) -> DataFrame:
     """candidates minus url_seen with the cuckoo table as the prefilter —
     same contract/plan shape as ``bloom.filter_not_seen`` (cogrouped bucket
     probe, exact confirm of positives), plus deletion support upstream."""
@@ -398,7 +395,7 @@ def filter_not_seen_cuckoo(
     keys = key_cols or [hash_col]
     return cogroup_filter_not_seen(
         candidates, url_seen, cuckoos, cuckoo_probe_rows, hash_col, keys,
-        n_buckets, bucket_transform, return_flagged, confirm,
+        n_buckets,
     )
 
 

@@ -4,7 +4,7 @@ One round (SURVEY.md §7.2, reference lifecycle §3.3 re-targeted):
 
     candidates --canonicalize (SURT + xxhash64)--> keyed candidates
       --within-batch last-writer-wins dedup (U4)-->
-      --URL-seen anti-join, Bloom-prefiltered (J9 + Bloom layer)-->
+      --URL-seen anti-join, exact or filter-prefiltered (J9 + Bloom layer)-->
       --robots broadcast join, longest-prefix-wins (J8/F2)-->
       --per-host politeness budget rank (W5/T4) + fetch slots-->  SCHEDULED
       --fetch = equi-join against pages on canonical URL (J2)-->
@@ -18,11 +18,12 @@ pure-Python oracle simulator (logcrawler_spark/oracles/frontier_sim.py) must mat
 exactly.
 
 Scale shape per round: one shuffle for the dedup window (keyed by
-canonical_url), one anti-join on url_hash (co-bucketed + Bloom-prefiltered),
-a broadcast join for robots (rule table ~hosts, small), one window shuffle
-on host for the budget rank (mega-host skew bounded by the two-phase salted
-rank in ``operators.politeness``), and one equi-join to "fetch" (at real
-scale: the fetcher cluster; here the synthetic pages table).
+canonical_url), one anti-join on (url_hash, canonical_url) — exact, or
+Bloom/cuckoo-prefiltered in "join" mode — a broadcast join for robots
+(rule table ~hosts, small), one window shuffle on host for the budget
+rank (mega-host skew bounded by the two-phase salted rank in
+``operators.politeness``), and one equi-join to "fetch" (at real scale:
+the fetcher cluster; here the synthetic pages table).
 """
 
 from __future__ import annotations
@@ -50,6 +51,7 @@ from logcrawler_spark.plans.bloom import (
     filter_not_seen,
     merge_bloom_tables,
 )
+from logcrawler_spark.utils import materialized_rows
 
 PRIORITY_DECAY = 0.5  # child priority = parent * decay (exact in binary fp)
 _BLOOM_COMPACT_EVERY = 8  # rounds between bloom-delta compactions
@@ -120,18 +122,6 @@ def dedup_batch(cand: DataFrame) -> DataFrame:
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def _lww_dedup_pandas(pdf):
-    """pandas twin of :func:`dedup_batch` (identical order keys), applied
-    per url_hash bucket inside the bloom-probe kernel — rows sharing a
-    canonical_url share the bucket, so the dedup needs no shuffle of its
-    own."""
-    return pdf.sort_values(
-        ["canonical_url", "priority", "host", "path"],
-        ascending=[True, False, True, True],
-        kind="mergesort",
-    ).drop_duplicates("canonical_url", keep="first")
 
 
 def robots_per_host(robots: DataFrame) -> DataFrame:
@@ -317,12 +307,15 @@ def politeness_rank(
     )
 
 
-#: auto probe_confirm stays "inline" while |url_seen| <= FACTOR * |cands|;
-#: past that, bloom negatives stop shipping the bucket key sets through
-#: the probe shuffle + Arrow and the exact confirm becomes a selective
-#: anti-join ("join" mode). The crossover is coarse on purpose: both modes
-#: are oracle-exact, the factor only picks which cost shape to pay.
+#: auto probe_confirm stays "inline" (the exact anti-join) while |url_seen|
+#: <= FACTOR * |cands|; past that, filter negatives skip the anti-join and
+#: only the filter's positives are confirmed against url_seen ("join"
+#: mode). The crossover is coarse on purpose: both modes are oracle-exact,
+#: the factor only picks which cost shape to pay.
 _PROBE_SWITCH_FACTOR = 4
+
+#: the URL-seen membership key: url_hash buckets, canonical_url decides
+_SEEN_KEYS = ["url_hash", "canonical_url"]
 
 
 def bucket_count_policy(
@@ -335,8 +328,8 @@ def bucket_count_policy(
     Power of two (the probe's signed pmod and the kernels' uint64 modulo
     must agree), floored at 8 for parallelism, stepped so a bucket holds
     <= ``target_keys_per_bucket`` keys after pow2 rounding: at 10^10 keys
-    the default yields 2^14 buckets ≈ 610k keys/bucket — the
-    inline-confirm sizing note — and the filter, the url_seen files, and
+    the default yields 2^14 buckets ≈ 610k keys/bucket (one filter row
+    per bucket stays a few MB), and the filter, the url_seen files, and
     the probe shuffle all share it."""
     need = max(1, -(-n_seen // target_keys_per_bucket))
     n = 1 << (need - 1).bit_length()
@@ -347,10 +340,12 @@ def bucket_count_policy(
 class CrawlState:
     """Round-over-round state; every df is materialized (lineage cut).
 
-    ``blooms`` is the standing per-bucket Bloom table covering ALL of
-    ``url_seen`` (invariant: no key in url_seen may test bloom-negative).
-    It is maintained incrementally — each round ORs in only that round's
-    newly-scheduled hashes.
+    ``blooms`` is the standing per-bucket filter table (Bloom or cuckoo)
+    covering ALL of the effective ``url_seen`` (invariant: no such key may
+    test filter-negative). It is maintained incrementally — each round adds
+    only that round's newly-scheduled hashes — and probed only by
+    ``probe_confirm="join"`` rounds; exact rounds anti-join url_seen
+    directly.
 
     ``n_seen`` / ``n_pending`` are driver-side row counts (parquet-footer
     metadata off the already-materialized per-round tables, never a data
@@ -394,6 +389,19 @@ def _materialize(df: DataFrame) -> DataFrame:
     from logcrawler_spark.utils import materialize
 
     return materialize(df)
+
+
+def _candidate_counts(candidates: DataFrame) -> tuple[int, int]:
+    """Exact ``(n_raw, n_cand)`` of a round's candidate input from a plain
+    aggregate query — one job, whose result AQE cannot drop. n_cand counts
+    canonical keys: the rows :func:`dedup_batch` keeps."""
+    per_key = (
+        canonicalize_candidates(candidates).groupBy("canonical_url").count()
+    )
+    row = per_key.agg(
+        F.sum("count").alias("n_raw"), F.count(F.lit(1)).alias("n_cand")
+    ).collect()[0]
+    return int(row["n_raw"] or 0), int(row["n_cand"])
 
 
 def _stage_clock():
@@ -585,16 +593,29 @@ def crawl_round(
     ages out (Bloom cannot express this, so TTL requires cuckoo), and the
     exact confirm runs against only the un-aged url_seen rows.
 
+    Every mode takes one candidate path: canonicalize -> :func:`dedup_batch`
+    -> URL-seen check -> robots -> politeness. The URL-seen check has two
+    shapes, both oracle-exact:
+
+    - exact (``probe_confirm="inline"``, and every ``use_bloom=False``
+      round): one left-anti join on (url_hash, canonical_url) against the
+      effective url_seen, inside the round's one sched job;
+    - filtered (``probe_confirm="join"``): the Bloom/cuckoo pre-split
+      sends filter negatives past the anti-join and confirms only the
+      positives — one extra job per round (the probe pin).
+
+    The filter itself is maintained in every ``use_bloom`` round, so a
+    crawl can switch shapes at any round.
+
     Scale-adaptive knobs (VERDICT r03 item 1):
 
-    - ``probe_confirm="auto"`` picks the confirm shape per round from the
-      tracked counts: "inline" while |url_seen| <=
+    - ``probe_confirm="auto"`` picks the shape per round from the tracked
+      counts: "inline" (exact) while |url_seen| <=
       ``_PROBE_SWITCH_FACTOR`` x |pending candidates| (a growing crawl's
       steady state — zero extra jobs), else "join" (a mature frontier,
-      where inline would ship the whole key set through the probe shuffle
-      + Arrow every round). Both modes are oracle-exact; the switch only
-      changes cost shape. The counts are parquet-footer metadata off the
-      previous round's materialized tables.
+      where the exact join would scan the whole url_seen every round). The
+      counts are parquet-footer metadata off the previous round's
+      materialized tables.
     - ``bloom_buckets=None`` derives the bucket count from |url_seen| via
       :func:`bucket_count_policy` (shared with the catalog's url_seen
       storage bucketing in ``_commit_round``). When the policy steps up,
@@ -666,36 +687,35 @@ def crawl_round(
     keyed = canonicalize_candidates(
         state.candidates.observe(obs_cand, F.count(F.lit(1)).alias("n_raw"))
     )
-
+    # ONE candidate path for every mode: the within-batch LWW dedup runs
+    # as a JVM window (:func:`dedup_batch`), then the URL-seen check. Its
+    # output count is n_cand in every mode.
+    obs_dedup = Observation(f"dedup_{rnd}")
+    cand = dedup_batch(keyed).observe(
+        obs_dedup, F.count(F.lit(1)).alias("n_cand")
+    )
+    filter_in = state.blooms
     if use_bloom:
-        # keyed candidates flow straight into the bloom-probe cogroup; its
-        # cached output is the ONE evaluation of the canonicalization
-        # regexes for every downstream stage. The within-batch LWW dedup
-        # runs INSIDE the probe kernel: same canonical -> same url_hash ->
-        # same bucket, so it rides the probe's shuffle and the dedicated
-        # dedup window shuffle is gone (VERDICT r01 task 9). Round 1 probes
-        # an EMPTY bloom table (every row definitely-new) so the fused path
-        # applies from the start.
-        standing = state.blooms
-        if standing is not None and n_buckets != want_buckets:
+        if filter_in is not None and n_buckets != want_buckets:
             # bucket-count policy stepped up: the standing filter's layout
             # (pmod at the old count) is invalid at the new one — rebuild
             # from the exact key set below (the re-bucket/split path,
             # amortized O(log |url_seen|) times over a crawl's life)
-            standing = None
+            filter_in = None
             n_buckets = want_buckets
-        if standing is None and state.round_no > 0:
-            # bootstrap BEFORE the probe (resume from a catalog lacking a
-            # filter table — or, for cuckoo, one whose committed filter was
-            # AHEAD of round_marker — or a use_bloom=False run resumed with
-            # True): the invariant is filter ⊇ effective url_seen — probing
-            # an empty table here would mark every seen URL definitely-new
-            # and re-schedule it. With TTL the rebuild must reproduce the
-            # START-of-round filter content {first_seen_round > rnd-ttl-1},
-            # NOT eff_seen {> rnd-ttl}: this round's delete_keys targets the
-            # keys aging out AT rnd, and a cuckoo delete of an absent key
-            # can evict a colliding twin's fingerprint (false negative) —
-            # so those keys must be IN the rebuilt table (ADVICE r02).
+        if filter_in is None and state.round_no > 0:
+            # bootstrap (resume from a catalog lacking a filter table — or,
+            # for cuckoo, one whose committed filter was AHEAD of
+            # round_marker — or a use_bloom=False run resumed with True):
+            # the invariant is filter ⊇ effective url_seen — a filter
+            # missing seen keys would let a "join"-mode probe mark them
+            # definitely-new and re-schedule them. With TTL the rebuild
+            # must reproduce the START-of-round filter content
+            # {first_seen_round > rnd-ttl-1}, NOT eff_seen {> rnd-ttl}:
+            # this round's delete_keys targets the keys aging out AT rnd,
+            # and a cuckoo delete of an absent key can evict a colliding
+            # twin's fingerprint (false negative) — so those keys must be
+            # IN the rebuilt table (ADVICE r02).
             boot_src = eff_seen
             if ttl_rounds is not None:
                 boot_src = state.url_seen.filter(
@@ -706,10 +726,9 @@ def crawl_round(
                 if filter_kind == "cuckoo"
                 else build_bloom_table
             )
-            standing = _materialize(
+            filter_in = _materialize(
                 build(boot_src, n_buckets=n_buckets)
             )
-        filter_in = standing
         if filter_in is None:  # round 1: nothing seen yet
             schema = (
                 CUCKOO_SCHEMA
@@ -718,92 +737,29 @@ def crawl_round(
                 " k int"
             )
             filter_in = keyed.sparkSession.createDataFrame([], schema)
+    if use_bloom and mode == "join":
+        # "join": filter negatives BYPASS the exact anti-join, so url_seen
+        # is only scanned by the (selective) confirm of filter positives —
+        # the right choice once |url_seen| >> |round candidates| (a mature
+        # frontier with bucketed storage, where the confirm join prunes by
+        # key bucket). Costs one extra materializing job per round (the
+        # probe pin).
         probe = (
             filter_not_seen_cuckoo
             if filter_kind == "cuckoo"
             else filter_not_seen
         )
-        if mode == "inline" and state.round_no == 0:
-            # ROUND-1 fast path (r6): a fresh crawl's URL-seen set is
-            # empty by construction (every CrawlState built at round 0
-            # starts from the empty frame; resume always lands at
-            # round_no >= 1), so the probe cogroup would ship every
-            # candidate through the Python boundary just to stamp
-            # __seen=False. The only real work in that kernel is the
-            # within-batch LWW dedup — run its JVM window twin
-            # (:func:`dedup_batch`, the documented identical-order-keys
-            # pair of ``_lww_dedup_pandas``) and skip the probe shuffle +
-            # Arrow round-trip entirely. Survivors and counts are
-            # identical (pinned by the frontier-oracle schedule gate);
-            # measured ~0.65s/run of Python-boundary cost at the sf1.0
-            # bench (guide §4: eliminate the boundary when a JVM
-            # formulation exists).
-            obs_probe = Observation(f"probe_{rnd}")
-            unseen = dedup_batch(keyed).observe(
-                obs_probe, F.count(F.lit(1)).alias("n_cand")
-            )
-        elif mode == "inline":
-            # the exact confirm of filter positives happens INSIDE the
-            # probe kernel against the bucket's url_seen keys (same
-            # url_hash -> same bucket, colocated by the probe's one
-            # shuffle). The probe therefore has a single downstream
-            # consumer — no fan-out to pin, no separate anti-join stage
-            # barriers, no probe job of its own: the whole candidate path
-            # (canonicalize -> dedup -> probe -> exact confirm -> robots
-            # -> politeness) is ONE materializing job per round (the sched
-            # write). n_cand rides as an Observation between the kernel
-            # and the seen-filter. Trade: the effective url_seen keys
-            # transit the probe shuffle + Arrow every round — the right
-            # default while candidates and url_seen are the same order of
-            # magnitude (a growing crawl's steady state).
-            flagged = probe(
-                keyed,
-                eff_seen,
-                filter_in,
-                hash_col="url_hash",
-                key_cols=["url_hash", "canonical_url"],
-                n_buckets=n_buckets,
-                bucket_transform=_lww_dedup_pandas,
-                confirm="inline",
-            )
-            obs_probe = Observation(f"probe_{rnd}")
-            unseen = (
-                flagged.observe(obs_probe, F.count(F.lit(1)).alias("n_cand"))
-                .filter(~F.col("__seen"))
-                .drop("__seen")
-            )
-        else:
-            # "join": bloom negatives BYPASS the exact anti-join entirely,
-            # so url_seen is only scanned by the (selective) confirm join —
-            # the right choice once |url_seen| >> |round candidates| (a
-            # mature 10^10-key frontier with bucketed storage, where the
-            # confirm join prunes by key bucket instead of shipping every
-            # seen key through Python). Costs one extra materializing job
-            # per round (the probe pin).
-            unseen, flagged = probe(
-                keyed,
-                eff_seen,
-                filter_in,
-                hash_col="url_hash",
-                key_cols=["url_hash", "canonical_url"],
-                n_buckets=n_buckets,
-                bucket_transform=_lww_dedup_pandas,
-                return_flagged=True,
-            )
-            n_cand = flagged.count()  # parquet-footer count: metadata only
+        unseen = probe(
+            cand, eff_seen, filter_in,
+            hash_col="url_hash", key_cols=_SEEN_KEYS, n_buckets=n_buckets,
+        )
     else:
-        obs_dedup = Observation(f"dedup_{rnd}")
-        cand = dedup_batch(keyed).observe(
-            obs_dedup, F.count(F.lit(1)).alias("n_cand")
-        )
-        unseen = filter_not_seen(
-            cand,
-            eff_seen,
-            None,
-            hash_col="url_hash",
-            key_cols=["url_hash", "canonical_url"],
-            n_buckets=n_buckets,
-        )
+        # exact: one left-anti join against the effective url_seen — the
+        # probe while url_seen and the candidates are the same order of
+        # magnitude, so the whole candidate path (canonicalize -> dedup ->
+        # anti-join -> robots -> politeness) is ONE materializing job per
+        # round (the sched write)
+        unseen = cand.join(eff_seen, on=_SEEN_KEYS, how="left_anti")
     allowed = apply_robots(unseen, robots)
     mark(f"r{rnd} plan-build")
     sched = _materialize(
@@ -813,23 +769,39 @@ def crawl_round(
         ).withColumn("round", F.lit(rnd))
     )
     mark(f"r{rnd} probe+robots+politeness+sched-write")
-    # fuse_fetch: the job above just executed the PREVIOUS round's fused
-    # fetch plan (our candidate input), so its deferred observation is now
-    # resolved — collect that round's metrics here, one round late
+    n_sched = materialized_rows(sched)
+    pending_in = state.pending_fetch
+    if n_sched:
+        # the observations resolved in the first action over the candidate
+        # plan (the sched write, or the probe pin in "join" mode) — and
+        # with fuse_fetch, so did the PREVIOUS round's deferred fetch that
+        # the same job executed. A round that schedules anything has no
+        # empty stage on its candidate chain, so AQE pruned none of them.
+        n_raw = int(obs_cand.get["n_raw"])
+        n_cand = int(obs_dedup.get["n_cand"])
+    else:
+        # nothing scheduled: AQE may have replaced an empty stage of the
+        # candidate chain by an empty relation, and every observed node
+        # inside it with it. A missing observation is not a zero (an empty
+        # stage downstream prunes a non-empty candidate subtree too), so
+        # re-derive the counts exactly. Only such degenerate rounds pay
+        # the extra jobs.
+        cand_in = state.candidates
+        if pending_in is not None:
+            # the deferred fetch's observations rode the same stages: re-run
+            # it from its recompute point, as an eager round would have
+            outlinks, obs, obs_att = _fetch_extract_plan(
+                pages_c, pending_in["sched"], pending_in["round"],
+                failure_rate_pct, max_fetch_attempts,
+            )
+            cand_in = _materialize(outlinks)
+            pending_in = {**pending_in, "obs": obs, "obs_att": obs_att}
+        n_raw, n_cand = _candidate_counts(cand_in)
     prev_metrics = (
-        _resolve_pending_metrics(state.pending_fetch)
-        if state.pending_fetch is not None
+        _resolve_pending_metrics(pending_in)
+        if pending_in is not None
         else None
     )
-    # observations resolve after the first action over the candidate plan
-    # (the sched materialize above, or the probe pin in "join" mode)
-    n_raw = int(obs_cand.get["n_raw"])
-    if use_bloom:
-        if mode == "inline":
-            n_cand = int(obs_probe.get["n_cand"])
-        # "join" mode counted n_cand off the probe parquet footers already
-    else:
-        n_cand = int(obs_dedup.get["n_cand"])
 
     # fetch + extract + expand in ONE pass over the corpus — plan built by
     # :func:`_fetch_extract_plan` (shared with the fused-resume rebuild)
@@ -957,7 +929,7 @@ def crawl_round(
     # round is unchanged)
     n_seen_next, n_pending_next = state.n_seen, state.n_pending
     if auto_scale:
-        n_seen_next = state.n_seen + sched.count()
+        n_seen_next = state.n_seen + n_sched
         if fuse_fetch:
             # the deferred fetch must NOT run early (counting next_cand
             # would execute it — the exact conflict VERDICT r04 named), so
@@ -971,7 +943,7 @@ def crawl_round(
             # the fused_pending marker).
             n_pending_next = n_raw
         else:
-            n_pending_next = next_cand.count()
+            n_pending_next = materialized_rows(next_cand)
     # schedule/metrics are OUTPUTS (nothing downstream in the loop reads
     # them) and they union per-round checkpointed frames — keeping them
     # lazy saves two materialization jobs per round
@@ -1148,9 +1120,12 @@ def run_crawl(
     # the robots broadcast side is loop-invariant: aggregate + pin it ONCE
     # instead of re-aggregating the rule table every round
     robots_ph = _materialize(robots_per_host(robots))
+    # statically empty (the optimizer folds it to an empty LocalRelation):
+    # round 1's anti-join is pruned at plan time, and later rounds' url_seen
+    # unions keep the parquet stats that let the anti-join broadcast it
     empty_seen = spark.createDataFrame(
         [], "url_hash long, canonical_url string, first_seen_round int"
-    )
+    ).filter(F.lit(False))
     if priority_source not in ("inherit", "pagerank"):
         raise ValueError(f"unknown priority_source {priority_source!r}")
     pagerank = priority_source == "pagerank"

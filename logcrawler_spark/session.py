@@ -43,7 +43,7 @@ def get_spark(
     # first minutes of query time (crawl runs [198s, 102s, 30s] without
     # vs [25s, 16s, 12s] with — 6x on the bench median). -Xms=-Xmx plus
     # AlwaysPreTouch moves that cost to session startup, exactly what
-    # production executors do (guide §9: size memory to the workload).
+    # production executors do (guide §5: size memory to the workload).
     # 24g (was 48g): GC logs show ~6GB live at the sf1.0 bench, 24g keeps
     # 4x headroom, stays under the 32GB compressed-oops limit, and
     # pre-touches in seconds (48g pre-touch measured 250s on this microVM).

@@ -2,11 +2,30 @@
 
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
+import tempfile
+from urllib.parse import unquote, urlparse
+
 from pyspark.sql import DataFrame
 
 
 _MAT_DIR: str | None = None
 _MAT_SEQ = 0
+
+
+def scratch_dir() -> str:
+    """The process's ``logcrawler-mat-*`` scratch directory, created on
+    first use and removed at interpreter exit.
+
+    Not earlier: frames returned by :func:`materialize` (and so by
+    ``run_crawl``) read from it for the rest of the session."""
+    global _MAT_DIR
+    if _MAT_DIR is None:
+        _MAT_DIR = tempfile.mkdtemp(prefix="logcrawler-mat-")
+        atexit.register(shutil.rmtree, _MAT_DIR, ignore_errors=True)
+    return _MAT_DIR
 
 
 def materialize(df: DataFrame) -> DataFrame:
@@ -23,15 +42,33 @@ def materialize(df: DataFrame) -> DataFrame:
     WholeStageCodegen and re-evaluates the plan's expressions interpreted,
     measured up to 30x slower at 32 threads (see plans/frontier.py).
     """
-    global _MAT_DIR, _MAT_SEQ
-    import tempfile
-
-    if _MAT_DIR is None:
-        _MAT_DIR = tempfile.mkdtemp(prefix="logcrawler-mat-")
+    global _MAT_SEQ
     _MAT_SEQ += 1
-    path = f"{_MAT_DIR}/m{_MAT_SEQ:05d}"
+    path = f"{scratch_dir()}/m{_MAT_SEQ:05d}"
     df.write.mode("overwrite").parquet(path)
     return df.sparkSession.read.parquet(path)
+
+
+def _local_paths(df: DataFrame) -> list[str] | None:
+    """Local paths of the files backing ``df`` (URIs percent-decoded), or
+    None when any of them is not a ``file:`` URI. Driver-side, no job."""
+    uris = df.inputFiles()
+    if not all(u.startswith("file:") for u in uris):
+        return None
+    return [unquote(urlparse(u).path) for u in uris]
+
+
+def materialized_rows(df: DataFrame) -> int:
+    """Row count of a frame :func:`materialize` returned, summed from its
+    parquet footers on the driver — no Spark job. Only valid for such an
+    unfiltered scan; files off the local filesystem fall back to
+    ``count()``."""
+    import pyarrow.parquet as pq
+
+    paths = _local_paths(df)
+    if paths is None:
+        return df.count()
+    return sum(pq.ParquetFile(p).metadata.num_rows for p in paths)
 
 
 def ensure_min_partitions(
@@ -55,24 +92,24 @@ def ensure_min_partitions(
     many MB.  When set, the target partition count is derived from the
     on-disk bytes of the backing files (driver-side ``getsize``, no job) as
     ``bytes // min_split_bytes``, capped at ``n`` — so tiny local inputs
-    skip the shuffle entirely while a 100-TB table still splits.  Inputs
-    not backed by local files fall back to the unconditional behavior.
+    skip the shuffle entirely while a 100-TB table still splits. The floor
+    division is deliberate: inputs under 2x the gate stay on one task
+    (moving this gate has shifted pack timings before). Inputs not wholly
+    backed by local files, or whose size cannot be read, fall back to the
+    unconditional behavior.
     """
     spark = df.sparkSession
     if n is None:
         n = spark.sparkContext.defaultParallelism
     if min_split_bytes is not None:
-        import os as _os
-
-        try:
-            paths = [f for f in df.inputFiles() if f.startswith("file:")]
-            if paths:
-                total = sum(
-                    _os.path.getsize(p[len("file:"):]) for p in paths
-                )
+        paths = _local_paths(df)
+        if paths:
+            try:
+                total = sum(os.path.getsize(p) for p in paths)
+            except OSError:
+                total = None  # size unknown -> keep the unconditional target
+            if total is not None:
                 n = min(n, max(1, total // min_split_bytes))
-        except Exception:
-            pass  # size unknown -> keep the unconditional target
     if n <= 1:
         return df
     if df.rdd.getNumPartitions() >= n:

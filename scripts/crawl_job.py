@@ -51,8 +51,11 @@ def main() -> None:
     ap.add_argument(
         "--probe-confirm", choices=["inline", "join", "auto"],
         default="inline",
-        help="URL-seen confirm shape; auto flips inline->join once the"
-        " seen set outgrows the candidate stream",
+        help="URL-seen check shape: inline = exact anti-join against"
+        " url_seen inside the round's one job; join = Bloom/cuckoo"
+        " pre-split, anti-join confirm of filter positives only; auto"
+        " flips inline->join once the seen set outgrows the candidate"
+        " stream",
     )
     ap.add_argument(
         "--auto-buckets", action="store_true",

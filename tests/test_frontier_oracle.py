@@ -287,23 +287,30 @@ def test_fetch_permanent_failures_drop_pages_and_are_counted(spark):
     assert row["pages_fetched_total"] + row["fetch_failures_total"] == n_clean
 
 
-def test_probe_confirm_join_matches_inline(spark):
-    """The two exact-confirm strategies (in-kernel vs anti-join, both over
-    the same bloom prefilter) are plan-level alternatives with identical
-    semantics: same schedule (ranks + slots), same URL-seen set, same
-    candidate counts in metrics."""
+@pytest.mark.parametrize("fuse_fetch", [False, True], ids=["eager", "fused"])
+@pytest.mark.parametrize(
+    "filter_kw",
+    [{"filter_kind": "bloom"}, {"filter_kind": "cuckoo", "ttl_rounds": 1}],
+    ids=["bloom", "cuckoo_ttl"],
+)
+def test_probe_confirm_join_matches_inline(spark, filter_kw, fuse_fetch):
+    """The two URL-seen check shapes (exact anti-join vs filter pre-split
+    plus anti-join confirm of positives) are plan-level alternatives with
+    identical semantics: same schedule (ranks + slots), same URL-seen set,
+    same candidate counts in metrics — across both filters, both fetch
+    modes and the filterless run, and all equal to the simulator."""
     pages = generate_pages(spark, SF_SMOKE, n_hosts=N_HOSTS)
     seeds = generate_seeds(spark, SF_SMOKE, n_hosts=N_HOSTS)
     robots = generate_robots_rules(spark, n_hosts=N_HOSTS)
 
-    def run(mode):
+    def run(**kw):
         st = run_crawl(
             spark, pages, seeds, robots, rounds=2, budget=4,
-            probe_confirm=mode,
+            fuse_fetch=fuse_fetch, **filter_kw, **kw,
         )
         sched = sorted(
-            (r["round"], r["host"], r["canonical_url"], r["host_rank"],
-             r["slot_ms"])
+            (r["round"], r["host"], r["priority"], r["canonical_url"],
+             r["host_rank"], r["slot_ms"])
             for r in st.schedule.collect()
         )
         seen = {r["canonical_url"] for r in st.url_seen.collect()}
@@ -315,7 +322,78 @@ def test_probe_confirm_join_matches_inline(spark):
         )
         return sched, seen, cand
 
-    assert run("inline") == run("join")
+    inline = run(probe_confirm="inline")
+    assert run(probe_confirm="join") == inline
+    if filter_kw["filter_kind"] == "bloom" and not fuse_fetch:
+        assert run(use_bloom=False) == inline
+    sim = simulate_crawl(
+        pages.toPandas(), seeds.toPandas(), robots.toPandas(), 2, 4,
+        ttl_rounds=filter_kw.get("ttl_rounds"),
+    )
+    assert inline[0] == sorted(tuple(t) for t in sim.schedule)
+    assert inline[1] == sim.url_seen
+    assert [r for r, _ in inline[2]] == [1, 2]
+
+
+@pytest.fixture(scope="module")
+def dead_seed_crawl(spark):
+    """Inputs whose every seed is a dead link (no page), so round 2 of a
+    crawl has no candidates; the simulator's answer per ttl_rounds."""
+    from logcrawler_spark.functions.urls import canonicalize_url
+
+    pages = generate_pages(spark, SF_SMOKE, n_hosts=N_HOSTS)
+    robots = generate_robots_rules(spark, n_hosts=N_HOSTS)
+    live = pages.select(canonicalize_url(F.col("url")).alias("c"))
+    seeds = generate_seeds(spark, SF_SMOKE, n_hosts=N_HOSTS).join(
+        live, canonicalize_url(F.col("url")) == F.col("c"), "left_anti"
+    )
+    frames = pages.toPandas(), seeds.toPandas(), robots.toPandas()
+    sims = {
+        ttl: simulate_crawl(*frames, 2, 4, ttl_rounds=ttl)
+        for ttl in (None, 1)
+    }
+    return pages, seeds, robots, len(frames[1]), sims
+
+
+@pytest.mark.parametrize("probe_confirm", ["inline", "join"])
+@pytest.mark.parametrize(
+    "filter_kw",
+    [
+        {"filter_kind": "bloom"},
+        {"filter_kind": "cuckoo", "ttl_rounds": 1},
+        {"use_bloom": False},
+    ],
+    ids=["bloom", "cuckoo_ttl", "exact"],
+)
+@pytest.mark.parametrize("fuse_fetch", [False, True], ids=["eager", "fused"])
+def test_empty_round_counts_are_total_under_aqe(
+    spark, dead_seed_crawl, fuse_fetch, filter_kw, probe_confirm
+):
+    """Round 2 has no candidates. AQE then replaces the empty stages of
+    the candidate chain by empty relations, dropping the Observations
+    inside them; the round's candidate counts must still be read exactly,
+    and the crawl must equal the simulator."""
+    pages, seeds, robots, n_seeds, sims = dead_seed_crawl
+    st = run_crawl(
+        spark, pages, seeds, robots, rounds=2, budget=4,
+        fuse_fetch=fuse_fetch, probe_confirm=probe_confirm, **filter_kw,
+    )
+    sim = sims[filter_kw.get("ttl_rounds")]
+    got = sorted(
+        (r["round"], r["host"], r["priority"], r["canonical_url"],
+         r["host_rank"], r["slot_ms"])
+        for r in st.schedule.collect()
+    )
+    assert got and got == sorted(tuple(t) for t in sim.schedule)
+    assert {r[0] for r in got} == {1}  # round 2 scheduled nothing
+    assert {r["canonical_url"] for r in st.url_seen.collect()} == sim.url_seen
+    assert sorted(
+        set(
+            (r["round"], r["urls_raw_total"], r["urls_candidates_total"],
+             r["pages_fetched_total"])
+            for r in st.metrics.collect()
+        )
+    ) == [(1, n_seeds, n_seeds, 0)]
 
 
 def test_windowed_politeness_spillover_matches_simulator(spark):

@@ -176,3 +176,40 @@ def test_ensure_min_partitions_size_gate(spark):
     # unsplittable file would be spread
     sized = ensure_min_partitions(d, min_split_bytes=1)
     assert sized.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+
+
+def test_ensure_min_partitions_size_gate_path_with_space(spark, tmp_path):
+    """The size gate reads local file sizes from percent-encoded URIs: a
+    parquet dir whose path holds a space must still be gated (a failed
+    size read would fall back to the unconditional repartition)."""
+    from logcrawler_spark.utils import ensure_min_partitions
+
+    path = str(tmp_path / "dir with space")
+    spark.range(100).coalesce(1).write.parquet(path)
+    d = spark.read.parquet(path)
+    assert any("%20" in f for f in d.inputFiles())
+    gated = ensure_min_partitions(d, n=4, min_split_bytes=32 << 20)
+    assert gated.rdd.getNumPartitions() == d.rdd.getNumPartitions() == 1
+    sized = ensure_min_partitions(d, n=4, min_split_bytes=1)
+    assert sized.rdd.getNumPartitions() == 4
+
+
+def test_scratch_dir_removed_at_exit(tmp_path):
+    """materialize's scratch dir lives as long as the interpreter: a
+    process that created it leaves nothing behind once it exits."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c",
+         "from logcrawler_spark.utils import scratch_dir;"
+         " d = scratch_dir(); open(d + '/f', 'w').close(); print(d)"],
+        cwd=root, env={**os.environ, "TMPDIR": str(tmp_path)},
+        capture_output=True, text=True, check=True,
+    )
+    made = out.stdout.strip()
+    assert os.path.basename(made).startswith("logcrawler-mat-")
+    assert os.path.dirname(made) == str(tmp_path)
+    assert not os.path.exists(made)
